@@ -7,8 +7,8 @@ backups + stdout (``:1124-1150``), and a two-thread topology — heartbeat
 
 Engine: same nine options with the same defaults, the same rotating-log
 shape, and the thread topology subsumed by Structured Streaming — one
-streaming query runs the packet pipeline (source → decode → stateful
-calibration → line protocol → InfluxDB sink) and the heartbeat timer
+streaming query runs the packet pipeline (source → decode →
+broadcast-dim calibration → line protocol → InfluxDB sink) and the heartbeat timer
 lives inside the source connector where keep-alive belongs (§3.3).
 Like the reference, a failed APRS-IS login does not exit — the
 connector retries forever (``immortal``, ``:1098``, ``:1187-1196``).
@@ -27,12 +27,11 @@ import sys
 from logging.handlers import TimedRotatingFileHandler
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from aprs2influxdb_spark.session import get_spark
-from aprs2influxdb_spark.sinks.influxdb import influxdb_sink
+from aprs2influxdb_spark.sinks.influxdb import influxdb_sink_broadcast_calibrated
 from aprs2influxdb_spark.sources.aprsis import decode_frames, register
-from aprs2influxdb_spark.streaming.calibration import with_streaming_calibration
-from aprs2influxdb_spark.streaming.pipeline import stream_lines
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -49,12 +48,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--port", help="Set APRS-IS port", default="10152")
     p.add_argument("--interval", help="Set APRS-IS heartbeat interval in minutes", default="15")
     p.add_argument("--debug", help="Set logging level to DEBUG", action="store_true")
-    p.add_argument(
-        "--calibration", choices=["broadcast", "apws", "tws"], default="broadcast",
-        help="telemetry-equation calibration strategy: per-batch broadcast "
-        "dim (default; fastest at realistic key counts — BASELINE.md "
-        "round-8 A/B), applyInPandasWithState, or transformWithState",
-    )
     # engine extension (the reference has no checkpointing at all):
     # distinct daemons need distinct checkpoints, and /tmp is volatile
     p.add_argument(
@@ -109,43 +102,37 @@ def create_log(path: str, debug: bool = False) -> logging.Logger:
     return logger
 
 
-def _source(spark: SparkSession, args: argparse.Namespace, raw: DataFrame | None) -> DataFrame:
-    if raw is not None:
-        return raw
-    register(spark)
-    return (
-        spark.readStream.format("aprsis")
-        .option("callsign", args.callsign)
-        .option("port", args.port)
-        .option("heartbeat_seconds", float(args.interval) * 60)
-        .load()
-    )
-
-
-def build_pipeline(
-    spark: SparkSession, args: argparse.Namespace, raw: DataFrame | None = None,
-    strategy: str = "apws",
-) -> DataFrame:
-    """Wire source → decode → KEYED-STATE calibration → line protocol
-    (the ``apws``/``tws`` strategies; the default ``broadcast``
-    strategy calibrates inside the sink instead — see ``main``).
+def start_daemon(
+    spark: SparkSession, args: argparse.Namespace, raw: DataFrame | None = None
+) -> StreamingQuery:
+    """Start the daemon's one streaming query: source → ``decode_frames``
+    → ``influxdb_sink_broadcast_calibrated`` (per-batch broadcast
+    equations dim, line protocol, POST to ``--dbhost:--dbport``).
+    Equations take effect at the next micro-batch — the reference's own
+    granularity is coarser still (its dictionary applies at whatever
+    packet arrives after the eqns message).
 
     ``raw`` overrides the live APRS-IS source with any (raw, ingest_ts)
     stream (file/memory source in tests) — the rest of the pipeline is
     identical either way.
     """
-    from aprs2influxdb_spark.streaming.calibration import (
-        with_streaming_calibration_tws,
+    if raw is None:
+        register(spark)
+        raw = (
+            spark.readStream.format("aprsis")
+            .option("callsign", args.callsign)
+            .option("port", args.port)
+            .option("heartbeat_seconds", float(args.interval) * 60)
+            .load()
+        )
+    return influxdb_sink_broadcast_calibrated(
+        decode_frames(raw),
+        checkpoint=args.checkpoint,
+        url=f"http://{args.dbhost}:{args.dbport}",
+        db=args.dbname,
+        user=args.dbuser,
+        password=args.dbpassword,
     )
-
-    mk = with_streaming_calibration_tws if strategy == "tws" else with_streaming_calibration
-    packets = mk(decode_frames(_source(spark, args, raw)))
-    from pyspark.sql import functions as F
-
-    packets = packets.withColumn(
-        "eqns_effective", F.from_json("eqns_json", "array<array<double>>")
-    )
-    return stream_lines(packets, eqns_col="eqns_effective")
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -160,40 +147,7 @@ def main(argv: list[str] | None = None) -> None:
         sys.exit(run_query(args.query, args.sf_dir))
     logger = create_log(f"{sys.prefix}/aprs2influxdb.log", args.debug)
     logger.warning("starting aprs2influxdb_spark daemon")
-    spark = get_spark("aprs2influxdb-daemon")
-    url = f"http://{args.dbhost}:{args.dbport}"
-    if args.calibration == "broadcast":
-        # round-8 default: the soak A/B measured the broadcast-dim
-        # strategy at 1.67x the keyed-state operators at this key
-        # scale (see influxdb_sink_broadcast_calibrated's docstring
-        # and BASELINE.md); equations take effect at the next
-        # micro-batch — the reference's own granularity is coarser
-        # still (its dictionary applies at whatever packet arrives
-        # after the eqns message)
-        from aprs2influxdb_spark.sinks.influxdb import (
-            influxdb_sink_broadcast_calibrated,
-        )
-
-        packets = decode_frames(_source(spark, args, None))
-        query = influxdb_sink_broadcast_calibrated(
-            packets,
-            checkpoint=args.checkpoint,
-            url=url,
-            db=args.dbname,
-            user=args.dbuser,
-            password=args.dbpassword,
-        )
-    else:
-        lines = build_pipeline(spark, args, strategy=args.calibration)
-        query = influxdb_sink(
-            lines,
-            checkpoint=args.checkpoint,
-            url=url,
-            db=args.dbname,
-            user=args.dbuser,
-            password=args.dbpassword,
-        )
-    query.awaitTermination()
+    start_daemon(get_spark("aprs2influxdb-daemon"), args).awaitTermination()
 
 
 if __name__ == "__main__":

@@ -2668,7 +2668,7 @@ WITH prof AS (
   FROM events GROUP BY 1, 2
 ), m AS (
   SELECT user_id, map_from_entries(list({{'k': h, 'v': v}})) AS hm
-  FROM prof GROUP BY user_id
+  FROM prof WHERE h IS NOT NULL GROUP BY user_id
 ), pv AS (
   SELECT user_id,
          list_transform(range(0, {n}), i -> CAST(floor(coalesce(hm[i][1], 0.0) * 1000000 + 0.5) AS BIGINT)) AS q
@@ -3626,8 +3626,15 @@ def q_near_dup_clusters(spark, sf):
     return dd.near_dup_clusters(_t(spark, sf, "documents"))
 
 
+# LSH parameters of the near-dup pair graph, shared by
+# q_contamination_report's Spark side and the cluster SQL its oracle
+# derives lex_dup from: "degree >= 1" equals "cluster size >= 2" only
+# when both engines build the same graph
+NEAR_DUP_LSH = {"num_hashes": 16, "bands": 4, "threshold": 0.5}
+
+
 def _near_dup_clusters_sql() -> str:
-    pairs = _minhash_lsh_sql()  # identical pair graph as the Spark side
+    pairs = _minhash_lsh_sql(**NEAR_DUP_LSH)  # identical pair graph as the Spark side
     return f"""
 WITH RECURSIVE pairs AS ({pairs}),
 edges AS (
@@ -3752,10 +3759,10 @@ def q_contamination_report(spark, sf):
     multi-round part of this entry; measured ~4 s of its ~5.6 s at
     sf0.1) unnecessary for a boolean the report collapses to anyway.
     The oracle still derives the flag from the recursive-CTE clusters;
-    values are pinned identical."""
+    values are pinned identical, both sides built from ``NEAR_DUP_LSH``."""
     docs = _t(spark, sf, "documents")
     dec = dd.decontaminate(docs).select("doc_id", "n_overlap")
-    pairs = dd.minhash_lsh_pairs(docs)
+    pairs = dd.minhash_lsh_pairs(docs, **NEAR_DUP_LSH)
     lex = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
@@ -4305,11 +4312,14 @@ def hourly_profiles(spark, sf):
     four DTW/cosine consumers take, vs ~0.45 s for this shape — same
     single (user, hour) + (user) aggregation pair, same values (absent
     hours zero; ``try_element_at`` keeps missing keys NULL-not-throw
-    under ANSI)."""
+    under ANSI).  Events with a NULL ``ts`` have no hour and are
+    dropped, as the pivot dropped them: ``map_from_entries`` raises
+    on a NULL key."""
     prof = (
         _t(spark, sf, "events")
         .groupBy("user_id", F.hour("ts").alias("h"))
         .agg(rhu(F.avg("value"), 6).alias("v"))
+        .filter(F.col("h").isNotNull())
     )
     return (
         prof.groupBy("user_id")
@@ -4432,7 +4442,7 @@ WITH RECURSIVE prof AS (
   FROM events GROUP BY 1, 2
 ), m AS (
   SELECT user_id, map_from_entries(list({{'k': h, 'v': v}})) AS hm
-  FROM prof GROUP BY user_id
+  FROM prof WHERE h IS NOT NULL GROUP BY user_id
 ), pv AS (
   SELECT user_id,
          list_transform(range(0, {dim}), i -> coalesce(hm[i][1], 0.0)) AS profile
@@ -4485,7 +4495,7 @@ WITH RECURSIVE prof AS (
   FROM events GROUP BY 1, 2
 ), m AS (
   SELECT user_id, map_from_entries(list({{'k': h, 'v': v}})) AS hm
-  FROM prof GROUP BY user_id
+  FROM prof WHERE h IS NOT NULL GROUP BY user_id
 ), pv AS (
   SELECT user_id,
          list_transform(range(0, {dim}), i -> coalesce(hm[i][1], 0.0)) AS profile
@@ -4529,7 +4539,7 @@ WITH prof AS (
   FROM events GROUP BY 1, 2
 ), m AS (
   SELECT user_id, map_from_entries(list({'k': h, 'v': v})) AS hm
-  FROM prof GROUP BY user_id
+  FROM prof WHERE h IS NOT NULL GROUP BY user_id
 ), pv AS (
   SELECT user_id,
          list_transform(range(0, 24), i -> coalesce(hm[i][1], 0.0)) AS profile

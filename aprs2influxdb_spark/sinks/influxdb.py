@@ -8,8 +8,9 @@ throughput defect, SURVEY §4 "Anti-batching").  Engine behavior:
   POSTs its lines in chunks of ``batch_size`` over ONE reused HTTP
   connection — write amplification drops from 1 request/point to
   1 request/5000 points;
-- bounded exponential-backoff retry -> effectively-once into InfluxDB
-  (idempotent: line protocol upserts on identical timestamp+tagset);
+- bounded exponential-backoff retry -> at-least-once into InfluxDB;
+  effectively-once when the lines carry timestamps (line protocol
+  upserts on identical timestamp+tagset, ``timestamp_col``);
 - parity mode (``url=None``): lines append to a text dir instead, so
   tests and the oracle harness can diff exactly what would be written.
 
@@ -129,31 +130,14 @@ def influxdb_sink(
         if parity_dir is None:
             raise ValueError("parity mode needs parity_dir")
         writer = (
-            lines_df.select(line_col)
-            .writeStream.format("text")
-            .option("path", parity_dir)
-            .option("checkpointLocation", checkpoint)
+            lines_df.select(line_col).writeStream.format("text").option("path", parity_dir)
         )
-        if trigger_seconds:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()
+        return _start(writer, checkpoint, trigger_seconds)
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def _part(rows):
-            buf = [r[0] for r in rows]
-            if buf:
-                write_lines_http(buf, url, db, batch_size, user=user, password=password)
-            return iter(())
+        _post_partitions(batch_df.select(line_col), url, db, batch_size, user, password)
 
-        # executor-side partition writes: the driver never collects
-        batch_df.select(line_col).rdd.mapPartitions(_part).count()
-
-    writer = lines_df.writeStream.foreachBatch(_write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(lines_df.writeStream.foreachBatch(_write_batch), checkpoint, trigger_seconds)
 
 
 def influxdb_sink_broadcast_calibrated(
@@ -161,22 +145,18 @@ def influxdb_sink_broadcast_calibrated(
     batch_size: int = 5000, trigger_seconds: int | None = None,
     user: str | None = None, password: str | None = None,
 ):
-    """The broadcast-dim calibration strategy's sink (round 8): the
-    PACKET stream arrives uncalibrated; each micro-batch joins the
-    driver-held compacted equations dim (broadcast), renders line
-    protocol, and POSTs — no keyed state operator, no state store.
+    """The daemon's sink: the PACKET stream arrives uncalibrated; each
+    micro-batch joins the driver-held compacted equations dim
+    (``BroadcastCalibrator``, broadcast), renders line protocol
+    (``stream_lines``) and POSTs — no keyed state operator, no state
+    store.
 
-    Why this is the cli.py DEFAULT: the round-8 same-session 1M-frame
-    soak A/B measured 4,475 rows/s for this strategy vs 2,683
-    (applyInPandasWithState) and 2,579 (transformWithState) — the
-    keyed-state operators pay a per-key shuffle + Arrow state
-    round-trip for state that is ~9k keys × ≤15 doubles, i.e.
-    broadcast-sized by orders of magnitude (BASELINE.md round-8
-    table).  The crossover the keyed strategies exist for is a key
-    space too large to broadcast (tens of millions of senders) or
-    strict WITHIN-batch equation application; the reference's world
-    (thousands of callsigns, per-batch granularity) sits far on this
-    side of it."""
+    Delivery semantics: at-least-once.  The daemon's lines carry no
+    timestamp (reference parity, SURVEY §1.3 — InfluxDB assigns server
+    receive time), so a replayed micro-batch writes NEW points, not the
+    effectively-once upsert ``influxdb_sink(timestamp_col=...)`` gives.
+    The dim lives on the driver: after a restart it refills from the
+    equation messages that arrive from then on."""
     from pyspark.sql import functions as F
 
     from aprs2influxdb_spark.streaming.calibration import BroadcastCalibrator
@@ -192,23 +172,32 @@ def influxdb_sink_broadcast_calibrated(
             cal = calib.apply(batch_df, batch_id).withColumn(
                 "eqns_effective", F.from_json("eqns_json", "array<array<double>>")
             )
-            out = stream_lines(cal, eqns_col="eqns_effective")
-
-            def _part(rows):
-                buf = [r[0] for r in rows]
-                if buf:
-                    write_lines_http(
-                        buf, url, db, batch_size, user=user, password=password
-                    )
-                return iter(())
-
-            out.select("line").rdd.mapPartitions(_part).count()
+            out = stream_lines(cal, eqns_col="eqns_effective").select("line")
+            _post_partitions(out, url, db, batch_size, user, password)
         finally:
             batch_df.unpersist()
 
-    writer = packets_df.writeStream.foreachBatch(_write_batch).option(
-        "checkpointLocation", checkpoint
-    )
+    return _start(packets_df.writeStream.foreachBatch(_write_batch), checkpoint, trigger_seconds)
+
+
+def _post_partitions(
+    lines_df: DataFrame, url: str, db: str, batch_size: int,
+    user: str | None, password: str | None,
+) -> None:
+    """POST a one-column lines frame from the executors, one
+    ``write_lines_http`` call per partition: the driver never collects."""
+
+    def _part(rows):
+        buf = [r[0] for r in rows]
+        if buf:
+            write_lines_http(buf, url, db, batch_size, user=user, password=password)
+        return iter(())
+
+    lines_df.rdd.mapPartitions(_part).count()
+
+
+def _start(writer, checkpoint: str, trigger_seconds: int | None):
+    writer = writer.option("checkpointLocation", checkpoint)
     if trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()

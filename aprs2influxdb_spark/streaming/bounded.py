@@ -1552,9 +1552,10 @@ def _asof_group(
     value * latest-prior-error (identity 1.0 before any), half-up
     rounded to 4 decimals exactly like the batch ``rhu``.
 
-    Chunks are concatenated before the (ts, event_id) sort — sorting
-    per chunk would let an error row time-travel (see
-    ``streaming.calibration._calibrate_group``)."""
+    Chunks are concatenated before the (ts, event_id) sort — a key's
+    rows arrive as several Arrow chunks (split at maxRecordsPerBatch),
+    and sorting per chunk would let an error row in a later chunk
+    time-travel behind data rows of an earlier one."""
     calib = state.get[0] if state.exists else None
     chunks = list(pdfs)
     if not chunks:

@@ -9,7 +9,7 @@ wide packets DataFrame under ``readStream``.  What streaming adds:
 - windowed/watermarked analytics the reference never had (§2.9)
 - ``dedup_within_watermark``: APRS-IS upstream duplicate suppression,
   made explicit and bounded-state
-- stateful calibration lives in ``streaming.calibration``
+- per-sender calibration lives in ``streaming.calibration``
 
 Scale notes: the stateless path is shuffle-free per micro-batch; the
 windowed aggs shuffle on (window, key) with watermark-bounded state;
@@ -40,9 +40,10 @@ def stream_lines(packets: DataFrame, eqns_col: str | None = None) -> DataFrame:
     """Stateless pipeline: dispatch (D1/D2) + dead-letter filter (D3)
     + per-format projection (P1-P9) -> ``line`` column.
 
-    Calibration-aware scaling needs keyed state — chain
-    ``streaming.calibration.with_streaming_calibration`` before this
-    and pass its output column name as ``eqns_col``.
+    Calibration-aware scaling needs the per-sender equations — run a
+    micro-batch through ``streaming.calibration.BroadcastCalibrator``
+    first, parse its ``eqns_json`` to ``array<array<double>>`` and pass
+    that column's name as ``eqns_col``.
     """
     eqns = F.col(eqns_col) if eqns_col else None
     return with_line(

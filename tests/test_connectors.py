@@ -345,6 +345,17 @@ class TestCliDaemon:
         assert (args.callsign, args.port, args.interval, args.debug) == (
             "nocall", "10152", "15", False,
         )
+        # ...plus exactly four engine extensions, and nothing else
+        opts = {
+            o for a in build_parser()._actions for o in a.option_strings
+        } - {"-h", "--help"}
+        assert opts == {
+            "--dbhost", "--dbport", "--dbuser", "--dbpassword", "--dbname",
+            "--callsign", "--port", "--interval", "--debug",
+            "--checkpoint", "--query", "--sf-dir", "--list-queries",
+        }
+        with pytest.raises(SystemExit):
+            build_parser().parse_args(["--calibration", "apws"])
 
     def test_query_mode(self, spark, sf_dir, capsys):
         """--query runs a registry entry and prints JSON lines; unknown
@@ -358,16 +369,20 @@ class TestCliDaemon:
         assert len(lines) == 5 and {"event_type", "n", "total_value"} <= set(lines[0])
         assert run_query("no_such_query", sf_dir, spark=spark) == 2
 
-    def test_build_pipeline_file_source(self, spark, tmp_path):
-        """The daemon pipeline (decode -> stateful calibration -> line
-        protocol) over a file source standing in for the live socket:
-        telemetry-message frames must be absorbed into state, data
-        frames emitted as lines."""
-        from aprs2influxdb_spark.cli import build_parser, build_pipeline
+    def test_start_daemon_file_source(self, spark, tmp_path, http_server):
+        """The daemon's default wiring (decode -> broadcast-dim
+        calibration -> line protocol -> InfluxDB POST) over a file source
+        standing in for the live socket: the telemetry-message frame is
+        absorbed into the equations dim, every data frame arrives as a
+        line."""
+        from aprs2influxdb_spark.cli import build_parser, start_daemon
 
+        url, handler = http_server
+        host, port = url.rsplit("/", 1)[1].split(":")
+        eqns = "KB1LQC>APRS::KB1LQC   :EQNS.0,2,0,0,1,0,0,1,0,0,1,0,0,1,0"
         src = tmp_path / "raw"
         src.mkdir()
-        rows = [(f, None) for f in FRAMES]
+        rows = [(f, None) for f in FRAMES + [eqns]]
         spark.createDataFrame(rows, "raw string, ingest_ts timestamp").withColumn(
             "ingest_ts", F.current_timestamp()
         ).coalesce(1).write.parquet(str(src / "batch0"))
@@ -376,13 +391,23 @@ class TestCliDaemon:
             spark.readStream.schema("raw string, ingest_ts timestamp")
             .parquet(str(src / "*"))
         )
-        lines = build_pipeline(spark, build_parser().parse_args([]), raw=raw)
-        q = lines.select("line").writeStream.format("memory").queryName("cli_e2e").start()
+        args = build_parser().parse_args(
+            ["--dbhost", host, "--dbport", port, "--dbname", "aprs",
+             "--checkpoint", str(tmp_path / "ckpt")]
+        )
+        q = start_daemon(spark, args, raw=raw)
         try:
             q.processAllAvailable()
-            got = [r["line"] for r in spark.sql("SELECT * FROM cli_e2e").collect()]
         finally:
             q.stop()
+        assert {p for p, _b in handler.calls} == {"/write?db=aprs&u=root&p=root"}
+        got = sorted(l for _p, b in handler.calls for l in b.decode().splitlines())
+        exp = sorted(
+            r["line"]
+            for r in to_line_protocol(
+                decode_frames(spark.createDataFrame(rows, "raw string, ingest_ts timestamp"))
+            ).select("line").collect()
+        )
         assert len(got) == len(FRAMES)
-        assert any(l.startswith("packet,format=status ") for l in got)
-        assert any(l.startswith("packet,format=uncompressed ") for l in got)
+        assert got == exp
+        assert not any("telemetry" in l for l in got)

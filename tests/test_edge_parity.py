@@ -259,3 +259,29 @@ def test_pq_short_vector_parity(spark, tmp_path):
     for entry in ("pq_quantize", "pq_adc_topk"):
         out = _run_both(spark, tmp_path, entry, ["embeddings"])
         assert len(out) > 0, entry
+
+
+def test_hourly_profiles_null_ts(spark, tmp_path):
+    """An event with a NULL ``ts`` has no hour of day: the hourly
+    profiles drop it (as the old 24-column pivot did) instead of
+    raising [NULL_MAP_KEY] in ``map_from_entries``, and the DuckDB
+    twins that build the same hour map agree."""
+    import datetime as dt
+
+    from aprs2influxdb_spark.queries import hourly_profiles
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    rows = []
+    for u in range(7):
+        for k in range(3):
+            rows.append((len(rows), t0 + dt.timedelta(hours=u + 5 * k), u, "view", float(u + k + 1)))
+    rows.append((len(rows), None, 0, "view", 100.0))   # beside real hours
+    rows.append((len(rows), None, 7, "view", 9.0))     # a user with no hour at all
+    _write_events(tmp_path, rows)
+    prof = {r["user_id"]: r["profile"] for r in hourly_profiles(spark, str(tmp_path)).collect()}
+    assert sorted(prof) == list(range(7))
+    assert [h for h, v in enumerate(prof[0]) if v] == [0, 5, 10]
+    assert prof[0][0] == 1.0
+    for entry in ("ts_similarity", "sax_symbols", "ts_dtw_topk"):
+        out = _run_both(spark, tmp_path, entry, ["events"])
+        assert len(out) > 0, entry

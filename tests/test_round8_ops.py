@@ -373,9 +373,9 @@ class TestEpochStateBucketing:
 
 
 class TestBroadcastCalibration:
-    """Round 8 (verdict-r7 item 7): the broadcast-dim calibration
-    strategy — the soak A/B winner at realistic key counts, now the
-    cli.py default sink."""
+    """Round 8 (verdict-r7 item 7): the broadcast-dim calibration —
+    the soak A/B winner at realistic key counts, now the daemon's only
+    sink."""
 
     def _packets(self, spark, frames):
         from aprs2influxdb_spark.sources.aprsis import decode_frames
@@ -409,7 +409,7 @@ class TestBroadcastCalibration:
         assert got[0] == [0.0, 2.0, 0.0]  # a1 scales 2x from batch 2 on
 
     def test_cli_broadcast_sink_end_to_end(self, spark, tmp_path):
-        """cli.py's default path: packet stream -> broadcast-dim
+        """cli.py's path: packet stream -> broadcast-dim
         foreachBatch sink -> HTTP lines on a live stub.  Every data
         frame must arrive; the EQNS frame must not."""
         import sys

@@ -14,7 +14,7 @@ from aprs2influxdb_spark.operators.calibration import with_effective_equations
 from aprs2influxdb_spark.operators.projections import to_line_protocol
 from aprs2influxdb_spark.schema import PACKET_SCHEMA
 from aprs2influxdb_spark.sources.fixtures import fixture_rows, packets_df
-from aprs2influxdb_spark.streaming.calibration import with_streaming_calibration
+from aprs2influxdb_spark.streaming.calibration import BroadcastCalibrator
 from aprs2influxdb_spark.streaming.pipeline import (
     dedup_within_watermark,
     packet_rates,
@@ -61,22 +61,27 @@ class TestStatelessStreamParity:
 
 class TestStreamingCalibration:
     def test_cross_batch_state(self, spark, packet_dir):
-        stream = stream_packets(spark, packet_dir)
-        cal = with_streaming_calibration(stream)
-        lines = stream_lines(
-            cal.withColumn("eqns", F.from_json("eqns_json", "array<array<double>>")),
-            eqns_col="eqns",
-        )
-        _run_to_memory(lines.select("from_call", "ingest_ts", "line"), "clines")
-        got = {
-            (r["from_call"], r["ingest_ts"].second): r["line"]
-            for r in spark.sql("SELECT * FROM clines").collect()
-        }
+        """The daemon's calibrator inside ``foreachBatch``: the equations
+        dim carries across micro-batches (one arrival wave each)."""
+        calib = BroadcastCalibrator(spark)
+        got = {}
+
+        def _batch(batch_df, batch_id):
+            cal = calib.apply(batch_df, batch_id).withColumn(
+                "eqns", F.from_json("eqns_json", "array<array<double>>")
+            )
+            lines = stream_lines(cal, eqns_col="eqns")
+            for r in lines.select("from_call", "ingest_ts", "line").collect():
+                got[(r["from_call"], r["ingest_ts"].second)] = r["line"]
+
+        q = stream_packets(spark, packet_dir).writeStream.foreachBatch(_batch).start()
+        q.processAllAvailable()
+        q.stop()
         # telemetry BEFORE equations (wave 0) -> identity scaling
         assert got[("KC3DEF", 4)].endswith(
             "analog1=1.0,analog2=2.0,analog3=3.0,analog4=4.0,analog5=5.0"
         )
-        # telemetry AFTER the eqn wave -> scaled by state from wave 1
+        # telemetry AFTER the eqn wave -> scaled by the dim from wave 1
         assert got[("KC3DEF", 6)].endswith(
             "analog1=6.0,analog2=2.0,analog3=3.0,analog4=4.0,analog5=49.0"
         )

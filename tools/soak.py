@@ -15,9 +15,13 @@ per callback and writes each packet alone).  That turns the engine's
 "categorically faster" architecture claim into a measured ratio on
 identical hardware and an identical sink.
 
+``--stateful`` runs the daemon's own chain instead: per-sender
+telemetry calibration through ``influxdb_sink_broadcast_calibrated``.
+
 Usage::
 
     python tools/soak.py [--frames 1000000] [--files 50] [--ref-frames 20000]
+                         [--stateful] [--gate lsh]
 
 Prints one JSON line; record the numbers in BASELINE.md.
 """
@@ -71,7 +75,7 @@ def start_influx_stub(state: _StubState) -> tuple[http.server.ThreadingHTTPServe
 
 # eleven templates covering every dispatch format the reference
 # handles, INCLUDING telemetry-equation messages (the stateful leg's
-# keyed state per callsign); {i}/{cs} vary per frame so lines differ
+# equations dim per callsign); {i}/{cs} vary per frame so lines differ
 _TEMPLATES = [
     "{cs}>APRS:=4217.22N/07148.38W-soak {i}",
     "{cs}>APRS:_10090556c220s004g005t077",
@@ -140,7 +144,7 @@ def _gate_banded(df):
     )
 
 
-def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
+def run_soak_gate(n_frames: int, n_files: int) -> dict:
     """``--gate lsh`` (round 11, verdict-r10 item 7): the number a
     production deployment asks first — what does dedup-at-ingest cost?
     The first half of the corpus plays the already-drained epoch (its
@@ -151,35 +155,22 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
     the whole gate in the path; the index build (the drain itself) is
     timed separately, as in production it is an offline compaction.
 
-    Two gate strategies, the round-8 calibration-A/B discipline:
-
-    - ``apws``: the registry gates' shape — keyed bucket state via
-      ``applyInPandasWithState``, verdict rollup in ``foreachBatch``.
-      At APRS frame rates the per-BUCKET pandas group call dominates
-      (~1 row per group × tens of thousands of groups per batch).
-    - ``fold``: no keyed state anywhere — each batch bands JVM-side,
-      probes the accumulated index (the drain segment plus one
-      appended segment per prior batch), resolves in-batch anchors
-      with a per-key window, and appends its own bucket aggregate as
-      a new segment: the micro-batch form of the gate's drain CYCLE
-      (``bounded.merge_gate_index`` is the compaction).  Identical
-      anchor semantics under ordered ingest; everything stays in
-      whole-stage codegen."""
+    The gate is a per-batch segment fold with no keyed state anywhere:
+    each batch bands JVM-side, probes the accumulated index (the drain
+    segment plus one appended segment per prior batch), resolves
+    in-batch anchors with a per-key window, and appends its own bucket
+    aggregate as a new segment — the micro-batch form of the gate's
+    drain CYCLE (``bounded.merge_gate_index`` is the compaction).
+    Everything stays in whole-stage codegen."""
     import uuid
 
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from aprs2influxdb_spark.session import get_spark
     from aprs2influxdb_spark.sinks.influxdb import write_lines_http
     from aprs2influxdb_spark.sources.aprsis import decode_frames
-    from aprs2influxdb_spark.streaming.bounded import (
-        GroupStateTimeout,
-        LSH_GATE_STATE,
-        _lsh_bucket_group,
-        persist_gate_index,
-        probe_gate_index,
-    )
+    from aprs2influxdb_spark.streaming.bounded import persist_gate_index
     from aprs2influxdb_spark.streaming.pipeline import stream_lines
 
     spark = get_spark("soak", shuffle_partitions=32)
@@ -197,7 +188,7 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
     post = tempfile.mkdtemp(prefix="soak_post_")
     ckpt = tempfile.mkdtemp(prefix="soak_ckpt_")
     store_key = f"soak-{uuid.uuid4().hex[:8]}"
-    segs = None
+    segs = tempfile.mkdtemp(prefix="soak_segs_")
     totals = {"frames": 0, "dropped": 0}
     try:
         write_frames(pre, n_pre, pre_files, start=0, with_seq=True)
@@ -254,79 +245,43 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
             )
             _post_lines(stream_lines(decode_frames(survivors)).select("line"))
 
-        if strategy == "apws":
-            banded = probe_gate_index(_gate_banded(src), index)
-            out_schema = StructType(
-                [
-                    StructField("doc_id", LongType()),
-                    StructField("band", LongType()),
-                    StructField("raw", StringType()),
-                    StructField("anchor", LongType()),
-                ]
-            )
-            gated = banded.groupBy("key").applyInPandasWithState(
-                _lsh_bucket_group,
-                out_schema,
-                LSH_GATE_STATE,
-                "append",
-                GroupStateTimeout.NoTimeout,
-            )
+        # seed the segment index with the drain's aggregate: segment 0
+        index.write.mode("append").parquet(segs)
 
-            def _write_batch(batch_df, batch_id):
-                batch_df.persist()
-                try:
-                    _sink_verdict(
-                        batch_df.groupBy("doc_id", "raw").agg(
-                            F.min("anchor").alias("anchor")
-                        )
+        def _write_batch(batch_df, batch_id):
+            banded = _gate_banded(batch_df).persist()
+            try:
+                idx = (
+                    spark.read.parquet(segs)
+                    .groupBy("key")
+                    .agg(F.min("p_first").alias("p_first"))
+                )
+                w = Window.partitionBy("key")
+                j = banded.join(idx, "key", "left").withColumn(
+                    "mb", F.min("doc_id").over(w)
+                )
+                anchor_k = F.least(
+                    F.col("p_first"),
+                    F.when(F.col("mb") < F.col("doc_id"), F.col("mb")),
+                )
+                _sink_verdict(
+                    j.groupBy("doc_id", "raw").agg(
+                        F.min(anchor_k).alias("anchor")
                     )
-                finally:
-                    batch_df.unpersist()
-
-            stream_out = gated
-        else:  # fold: stateless plan, gate entirely inside foreachBatch
-            from pyspark.sql import Window
-
-            segs = tempfile.mkdtemp(prefix="soak_segs_")  # cleaned in finally
-            # seed with the drain's aggregate: segment 0
-            index.write.mode("append").parquet(segs)
-
-            def _write_batch(batch_df, batch_id):
-                banded = _gate_banded(batch_df).persist()
-                try:
-                    idx = (
-                        spark.read.parquet(segs)
-                        .groupBy("key")
-                        .agg(F.min("p_first").alias("p_first"))
-                    )
-                    w = Window.partitionBy("key")
-                    j = banded.join(idx, "key", "left").withColumn(
-                        "mb", F.min("doc_id").over(w)
-                    )
-                    anchor_k = F.least(
-                        F.col("p_first"),
-                        F.when(F.col("mb") < F.col("doc_id"), F.col("mb")),
-                    )
-                    _sink_verdict(
-                        j.groupBy("doc_id", "raw").agg(
-                            F.min(anchor_k).alias("anchor")
-                        )
-                    )
-                    # this batch's bucket aggregate becomes a segment;
-                    # merge_gate_index over the segments is the cycle's
-                    # offline compaction (not in the hot path)
-                    banded.groupBy("key").agg(
-                        F.min("doc_id").alias("p_first"),
-                        F.max("doc_id").alias("p_last"),
-                    ).write.mode("append").parquet(segs)
-                finally:
-                    banded.unpersist()
-
-            stream_out = src
+                )
+                # this batch's bucket aggregate becomes a segment;
+                # merge_gate_index over the segments is the cycle's
+                # offline compaction (not in the hot path)
+                banded.groupBy("key").agg(
+                    F.min("doc_id").alias("p_first"),
+                    F.max("doc_id").alias("p_last"),
+                ).write.mode("append").parquet(segs)
+            finally:
+                banded.unpersist()
 
         t0 = time.time()
         q = (
-            stream_out.writeStream.foreachBatch(_write_batch)
+            src.writeStream.foreachBatch(_write_batch)
             .option("checkpointLocation", ckpt)
             .start()
         )
@@ -350,7 +305,6 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
         return {
             "metric": "soak_gate_rows_per_sec",
             "gate": "lsh-drained",
-            "strategy": strategy,
             "value": round(rps, 1) if rps else None,
             "unit": "rows/sec",
             "frames": totals["frames"],
@@ -379,47 +333,21 @@ def run_soak_gate(n_frames: int, n_files: int, strategy: str = "apws") -> dict:
             segs,
             os.path.join(_cache_root(), f"gate{GATE_INDEX_VERSION}-{store_key}"),
         ):
-            if d:
-                shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def run_soak(
-    n_frames: int, n_files: int, ref_frames: int, stateful: bool = False,
-    strategy: str = "apws",
+    n_frames: int, n_files: int, ref_frames: int, stateful: bool = False
 ) -> dict:
     from pyspark.sql import functions as F
 
     from aprs2influxdb_spark.session import get_spark
-    from aprs2influxdb_spark.sinks.influxdb import influxdb_sink
+    from aprs2influxdb_spark.sinks.influxdb import (
+        influxdb_sink,
+        influxdb_sink_broadcast_calibrated,
+    )
     from aprs2influxdb_spark.sources.aprsis import decode_frames
     from aprs2influxdb_spark.streaming.pipeline import stream_lines
-
-    def _lines(packets):
-        """The production chain: stateless projection, or (--stateful)
-        the FULL cli.py pipeline with keyed as-of calibration state
-        per callsign — via one of the three strategies the round-8
-        A/B measures (--strategy): 'apws' applyInPandasWithState,
-        'tws' transformWithState, 'broadcast' a per-batch-refreshed
-        compacted dim (handled in the sink below, not here).
-        ~9000 state keys in this corpus — telemetry packets scale
-        through equations absorbed from the EQNS template's frames,
-        exactly the reference's behavior."""
-        if not stateful:
-            return stream_lines(packets)
-        from aprs2influxdb_spark.streaming.calibration import (
-            with_streaming_calibration,
-            with_streaming_calibration_tws,
-        )
-
-        mk = (
-            with_streaming_calibration_tws
-            if strategy == "tws"
-            else with_streaming_calibration
-        )
-        cal = mk(packets).withColumn(
-            "eqns_effective", F.from_json("eqns_json", "array<array<double>>")
-        )
-        return stream_lines(cal, eqns_col="eqns_effective")
 
     spark = get_spark("soak", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
@@ -444,30 +372,18 @@ def run_soak(
                 F.current_timestamp().alias("ingest_ts"),
             )
         )
+        packets = decode_frames(raw)
+        t0 = time.time()
         if stateful:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-        if stateful and strategy == "broadcast":
-            # broadcast-dim strategy: calibration happens INSIDE
-            # foreachBatch (join vs the driver-held compacted dim,
-            # refreshed per batch), so the streaming plan itself is
-            # stateless — no state store anywhere.  This is cli.py's
-            # default sink since the round-8 A/B.
-            from aprs2influxdb_spark.sinks.influxdb import (
-                influxdb_sink_broadcast_calibrated,
-            )
-
-            t0 = time.time()
+            # the daemon's chain: calibration against the driver-held
+            # equations dim (~9000 senders in this corpus) inside
+            # foreachBatch; telemetry packets scale through equations
+            # absorbed from the EQNS template's frames
             q = influxdb_sink_broadcast_calibrated(
-                decode_frames(raw), checkpoint=ckpt, url=url, db="soak"
+                packets, checkpoint=ckpt, url=url, db="soak"
             )
         else:
-            lines = _lines(decode_frames(raw))
-            t0 = time.time()
-            q = influxdb_sink(lines, checkpoint=ckpt, url=url, db="soak")
+            q = influxdb_sink(stream_lines(packets), checkpoint=ckpt, url=url, db="soak")
         while q.isActive:
             q.processAllAvailable()
             if not q.status["isDataAvailable"] and not q.status["isTriggerActive"]:
@@ -519,7 +435,6 @@ def run_soak(
         return {
             "metric": "soak_pipeline_rows_per_sec",
             "stateful": stateful,
-            "strategy": (strategy if stateful else "stateless"),
             "value": round(pipeline_rps, 1),
             "unit": "rows/sec",
             "frames": rows,
@@ -548,32 +463,19 @@ if __name__ == "__main__":
     ap.add_argument("--ref-frames", type=int, default=20_000)
     ap.add_argument(
         "--stateful", action="store_true",
-        help="run the full cli.py chain with keyed as-of calibration "
-        "state (strategy selected by --strategy)",
-    )
-    ap.add_argument(
-        "--strategy", choices=["apws", "tws", "broadcast"], default="apws",
-        help="calibration strategy for --stateful: applyInPandasWithState, "
-        "transformWithState, or per-batch broadcast dim (round-8 A/B)",
-    )
-    ap.add_argument(
-        "--gate-strategy", choices=["apws", "fold"], default="apws",
-        help="gate implementation for --gate lsh: keyed bucket state "
-        "(applyInPandasWithState) vs the stateless per-batch "
-        "segment-fold (JVM-only; the drain cycle at batch granularity)",
+        help="run the daemon's chain with per-sender telemetry calibration "
+        "(influxdb_sink_broadcast_calibrated)",
     )
     ap.add_argument(
         "--gate", choices=["none", "lsh"], default="none",
         help="run the drained LSH dedup gate inline (first half of the "
         "corpus = pre-drained epoch index; second half streams through "
-        "banding + index probe + keyed state + verdict rollup before "
-        "the sink)",
+        "banding + index probe + per-batch segment fold + verdict rollup "
+        "before the sink)",
     )
     args = ap.parse_args()
     if args.gate == "lsh":
-        out = run_soak_gate(args.frames, args.files, args.gate_strategy)
+        out = run_soak_gate(args.frames, args.files)
     else:
-        out = run_soak(
-            args.frames, args.files, args.ref_frames, args.stateful, args.strategy
-        )
+        out = run_soak(args.frames, args.files, args.ref_frames, args.stateful)
     print(json.dumps(out))
